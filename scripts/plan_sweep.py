@@ -3,7 +3,8 @@
 For each query at sf0.01: capture the formatted physical plan and count
 the structures the optimization guide says to look for (guide §7.2):
 Exchange nodes, join strategies, Python-boundary nodes
-(BatchEvalPython / ArrowEvalPython / MapInArrow / FlatMapGroupsInPandas),
+(BatchEvalPython / ArrowEvalPython / MapInArrow / FlatMapGroupsInPandas,
+and Python-list relations, `Scan ExistingRDD`),
 CartesianProduct, and scan pushdown markers. Emits one JSON line per
 query to stdout and the full sweep to BENCH/r06/plan_sweep.json.
 
@@ -41,6 +42,9 @@ PAT = {
     "py_batch": r"BatchEvalPython",
     "py_arrow": r"ArrowEvalPython",
     "py_map": r"MapInArrow|MapInPandas|FlatMapGroupsInPandas",
+    # a Python-list relation (createDataFrame(list)): every broadcast or
+    # collect of it is a job with Python workers (session.local_frame)
+    "py_rdd": r"Scan ExistingRDD",
     "window": r"\bWindow\b",
     "topk": r"TakeOrderedAndProject",
 }

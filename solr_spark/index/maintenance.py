@@ -37,6 +37,7 @@ from pyspark.sql import functions as F
 from solr_spark.index.builder import (
     DELETES_BROADCAST_CAP, SKIPLIST_CAP, Index, _write_bucketed,
 )
+from solr_spark.session import local_frame
 
 
 def delete_by_ids(index: Index, docids: list[int]) -> int:
@@ -49,7 +50,7 @@ def delete_by_ids(index: Index, docids: list[int]) -> int:
     ids = sorted({int(d) for d in docids})
     if not ids:
         return 0
-    batch = spark.createDataFrame([(d,) for d in ids], "docid long")
+    batch = local_frame(spark, [(d,) for d in ids], "docid long")
     return delete_by_df(index, batch)
 
 

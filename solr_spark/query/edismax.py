@@ -28,7 +28,8 @@ from pyspark.sql import functions as F
 from solr_spark.analysis.analyzer import tokens_col, tokens_sql
 from solr_spark.functions.bm25 import idf_col, idf_py, idf_sql, tf_part_col, tf_part_sql
 from solr_spark.functions.smallfloat import quantize_col, quantize_sql
-from solr_spark.query.engine import analyze_query
+from solr_spark.query.engine import analyze_query, empty_scores
+from solr_spark.session import local_frame
 
 
 def edismax_indexed(
@@ -57,12 +58,12 @@ def edismax_indexed(
     spark = index.spark
     qterms = analyze_query(qtext, index)
     if not qterms:
-        return spark.createDataFrame([], "docid long, score double")
+        return empty_scores(spark)
     stats = index.term_stats_fielded(
         [(f, t) for f in fields for t in qterms]
     )
     if not stats:
-        return spark.createDataFrame([], "docid long, score double")
+        return empty_scores(spark)
     n_docs = index.meta["n_docs"]
     avg = index.meta["avgdl_by_field"]
     rows = [
@@ -75,8 +76,8 @@ def edismax_indexed(
         )
         for (f, t), s in stats.items()
     ]
-    qrel = spark.createDataFrame(
-        rows, "tid long, w double, idf double, term string, avgdl double"
+    qrel = local_frame(
+        spark, rows, "tid long, w double, idf double, term string, avgdl double"
     )
     tids = [r[0] for r in rows]
     postings = (
@@ -223,10 +224,12 @@ def edismax_inline(
     spark = docs.sparkSession
     qterms = analyze_query(qtext)
     if not qterms:
-        return spark.createDataFrame([], "docid long, score double")
+        return empty_scores(spark)
     qrel = F.broadcast(
-        spark.createDataFrame(
-            [(t, float(c)) for t, c in qterms.items()], "term string, qtf double"
+        local_frame(
+            spark,
+            [(t, float(c)) for t, c in qterms.items()],
+            "term string, qtf double",
         )
     )
 

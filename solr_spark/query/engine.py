@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 from solr_spark.analysis.analyzer import tokenize_py
 from solr_spark.functions.bm25 import idf_py, tf_part_col
 from solr_spark.index.builder import Index
+from solr_spark.session import local_frame
 
 #: query-term count up to which the scoring weights inline as a CASE
 #: WHEN chain instead of a broadcast qrel join (the chain is linear in
@@ -45,6 +46,11 @@ def norm_mode(mode: str) -> str:
     if m not in ("OR", "AND"):
         raise ValueError(f"mode must be 'OR' or 'AND', got {mode!r}")
     return m
+
+
+def empty_scores(spark) -> DataFrame:
+    """A zero-row (docid, score) result."""
+    return local_frame(spark, [], "docid long, score double")
 
 
 def analyze_query(qtext: str, index: Index | None = None) -> dict[str, int]:
@@ -90,7 +96,7 @@ def _scored_postings(
         avgdl = index.meta["avgdl"]
         stats = index.term_stats_for(list(qterms))
     if not stats:
-        return spark.createDataFrame([], "docid long, contrib double"), 0
+        return local_frame(spark, [], "docid long, contrib double"), 0
     tids = [s["tid"] for s in stats.values()]
     postings = (
         index.postings_live()  # liveDocs: deleted docs never score
@@ -115,7 +121,8 @@ def _scored_postings(
             ),
         )
         return scored, len(stats)
-    qrel = spark.createDataFrame(
+    qrel = local_frame(
+        spark,
         [
             (s["tid"], float(qterms[t]), idf_py(int(s["df"]), n_docs))
             for t, s in stats.items()
@@ -147,7 +154,7 @@ def bm25_scores(
         _scored_postings(index, qterms, field) if qterms else (None, 0)
     )
     if n_present == 0 or (mode == "AND" and n_present < len(qterms)):
-        return index.spark.createDataFrame([], "docid long, score double")
+        return empty_scores(index.spark)
     agg = scored.groupBy("docid").agg(
         F.sum("contrib").alias("score"),
         F.count(F.lit(1)).alias("_nmatched"),
@@ -178,7 +185,7 @@ def bm25_topk(
         _scored_postings(index, qterms, field) if qterms else (None, 0)
     )
     if n_present == 0 or (mode == "AND" and n_present < len(qterms)):
-        result = index.spark.createDataFrame([], "docid long, score double")
+        result = empty_scores(index.spark)
     else:
         agg = scored.groupBy("docid").agg(
             F.sum("contrib").alias("score"),
@@ -289,7 +296,8 @@ def bm25_explain(
     spark = index.spark
     n_docs = index.meta["n_docs"]
     qterms = analyze_query(qtext, index)
-    empty = spark.createDataFrame(
+    empty = local_frame(
+        spark,
         [],
         "docid long, term string, qtf double, df long, idf double, "
         "tf long, dl_q long, tf_part double, contrib double",
@@ -310,7 +318,8 @@ def bm25_explain(
         stats = index.term_stats_for(list(qterms))
     if not stats:
         return empty
-    qrel = spark.createDataFrame(
+    qrel = local_frame(
+        spark,
         [
             (s["tid"], t, float(qterms[t]), int(s["df"]),
              idf_py(int(s["df"]), n_docs))
@@ -346,6 +355,12 @@ def bm25_explain(
     )
 
 
+def _empty_batch(spark) -> DataFrame:
+    return local_frame(
+        spark, [], "qid string, docid long, score double, rank int"
+    )
+
+
 def bm25_topk_batch(
     index: Index,
     queries: dict[str, str],
@@ -367,10 +382,15 @@ def bm25_topk_batch(
     - all queries analyzed driver-side once; ONE dictionary seek for
       the union of their terms;
     - ONE bucket-pruned postings scan with the union tid IN (...) list;
-    - a broadcast (qid, tid, qtf, idf) relation fans each posting out
-      to the queries that want it;
+    - a broadcast (qid, tid, qtf, idf) side table fans each posting
+      out to the queries that want it;
     - groupBy (qid, docid) + per-qid window top-k: two shuffles TOTAL
       for the entire batch, independent of |queries|.
+
+    The side tables (that weight table, the AND-mode required-term
+    counts and the qid labels) are driver-built `local_frame`
+    LocalRelations: each broadcast is a JVM-only job, where a list-built
+    LogicalRDD paid about 0.3 s of Python-worker time per broadcast.
 
     Same scoring/tie-break contract as bm25_topk (round(score,9) desc,
     docid asc); AND-mode queries require all their present terms and
@@ -384,11 +404,8 @@ def bm25_topk_batch(
     n_docs = index.meta["n_docs"]
     per_q = {qid: analyze_query(qt, index) for qid, qt in queries.items()}
     all_terms = sorted({t for qs in per_q.values() for t in qs})
-    empty = spark.createDataFrame(
-        [], "qid string, docid long, score double, rank int"
-    )
     if not all_terms:
-        return empty
+        return _empty_batch(spark)
     if index.meta.get("fields"):
         fld = field or index.meta["fields"][0]
         avgdl = index.meta["avgdl_by_field"][fld]
@@ -430,14 +447,12 @@ def bm25_topk_batch(
             )
         req_rows.append((cid, len(present)))
     if not qrel_rows:
-        return empty
-    qrel = spark.createDataFrame(
-        qrel_rows, "qid int, tid long, qtf double, idf double"
+        return _empty_batch(spark)
+    qrel = local_frame(
+        spark, qrel_rows, "qid int, tid long, qtf double, idf double"
     )
-    req = spark.createDataFrame(req_rows, "qid int, n_req int")
-    labels = spark.createDataFrame(
-        label_rows, "qid int, qid_label string"
-    )
+    req = local_frame(spark, req_rows, "qid int, n_req int")
+    labels = local_frame(spark, label_rows, "qid int, qid_label string")
     tids = sorted({r[1] for r in qrel_rows})
     postings = (
         index.postings_live()
@@ -498,7 +513,7 @@ def bm25_topk_maxscore(
         _scored_postings(index, qterms, field) if qterms else (None, 0)
     )
     if n_present == 0:
-        return index.spark.createDataFrame([], "docid long, score double")
+        return empty_scores(index.spark)
     return (
         scored.groupBy("docid")
         .agg(F.max("contrib").alias("score"))

@@ -16,6 +16,7 @@ from solr_spark.analysis.analyzer import tokens_col
 from solr_spark.functions.bm25 import idf_col, tf_part_col
 from solr_spark.functions.smallfloat import quantize_col
 from solr_spark.query.engine import analyze_query, norm_mode
+from solr_spark.session import local_frame
 
 
 def doc_tokens(docs: DataFrame, id_col: str = "docid", text_col: str = "content") -> DataFrame:
@@ -52,9 +53,9 @@ def bm25_inline_scores(
         (F.sum("doclen").cast("double") / F.count(F.lit(1))).alias("avgdl"),
     )
     if not qterms:
-        return spark.createDataFrame([], "docid long, s double")
-    qrel = spark.createDataFrame(
-        [(t, float(c)) for t, c in qterms.items()], "term string, qtf double"
+        return local_frame(spark, [], "docid long, s double")
+    qrel = local_frame(
+        spark, [(t, float(c)) for t, c in qterms.items()], "term string, qtf double"
     )
     tf = (
         tok.select("docid", "dl_q", F.explode("toks").alias("term"))

@@ -24,6 +24,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from solr_spark.index.builder import Index
+from solr_spark.query.engine import empty_scores
+from solr_spark.session import local_frame
 
 _FUNCS = {
     "min": F.min,
@@ -89,7 +91,7 @@ def payload_score(
         raise ValueError(f"payload_score: unknown func {func!r}")
     terms = index.analyze(query)
     spark = index.spark
-    empty = spark.createDataFrame([], "docid long, score double")
+    empty = empty_scores(spark)
     if not terms:
         return empty
     tids, pos = _payload_positions(index, terms)
@@ -139,7 +141,7 @@ def payload_check(
         raise ValueError(f"payload_check: unknown op {op!r}")
     terms = index.analyze(query)
     spark = index.spark
-    empty = spark.createDataFrame([], "docid long, n_spans long")
+    empty = local_frame(spark, [], "docid long, n_spans long")
     if not terms or len(payloads) != len(terms):
         return empty
     tids, pos = _payload_positions(index, terms)

@@ -36,6 +36,7 @@ from pyspark.sql import functions as F
 
 from solr_spark.analysis.analyzer import tokenize_py
 from solr_spark.index.builder import Index
+from solr_spark.session import local_frame
 
 
 def chain_match_count(pos_cols: list[Column], slop: int = 0) -> Column:
@@ -284,6 +285,10 @@ def chain_match_count_sql(pos_exprs: list[str], slop: int = 0) -> str:
     return f"len({cur})"
 
 
+def _no_phrase(spark) -> DataFrame:
+    return local_frame(spark, [], "docid long, phrase_freq int")
+
+
 def phrase_docids(
     index: Index,
     words: list[str],
@@ -303,9 +308,8 @@ def phrase_docids(
     terms: list[str] = []
     for w in words:
         terms.extend(index.analyze(w))
-    empty = spark.createDataFrame([], "docid long, phrase_freq int")
     if not terms:
-        return empty
+        return _no_phrase(spark)
     if index.meta.get("fields"):
         fld = field or index.meta["fields"][0]
         fstats = index.term_stats_fielded([(fld, t) for t in set(terms)])
@@ -313,7 +317,7 @@ def phrase_docids(
     else:
         stats = index.term_stats_for(sorted(set(terms)))
     if any(t not in stats for t in terms):
-        return empty  # a phrase term absent from the corpus
+        return _no_phrase(spark)  # a phrase term absent from the corpus
     tid_of = {t: stats[t]["tid"] for t in set(terms)}
     tids = sorted({tid_of[t] for t in terms})
 
@@ -401,7 +405,6 @@ def complex_phrase_docids(
     from functools import reduce
 
     spark = index.spark
-    empty = spark.createDataFrame([], "docid long, phrase_freq int")
     dict_df = index.term_dictionary(field)
     slot_tids: list[list[int]] = []
     for spec in slot_specs:
@@ -429,7 +432,7 @@ def complex_phrase_docids(
                 [stats[toks[0]]["tid"]] if toks[0] in stats else []
             )
             if not slot_tids[-1]:
-                return empty
+                return _no_phrase(spark)
             continue
         rows = cand.select("tid").limit(max_expansions + 1).collect()
         if len(rows) > max_expansions:
@@ -438,7 +441,7 @@ def complex_phrase_docids(
                 f"max_expansions={max_expansions}"
             )
         if not rows:
-            return empty
+            return _no_phrase(spark)
         slot_tids.append([r["tid"] for r in rows])
 
     all_tids = sorted({t for tids in slot_tids for t in tids})

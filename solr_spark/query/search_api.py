@@ -44,7 +44,9 @@ from solr_spark.plans.qparser import (
     Term,
     parse_ast,
 )
+from solr_spark.query.engine import empty_scores
 from solr_spark.query.expand_ops import fuzzy_query, prefix_query
+from solr_spark.session import local_frame
 
 
 def _is_num(s: str) -> bool:
@@ -130,7 +132,8 @@ def _scored_tokens(
         return None, 0, missing_must
     avgdl = float(index.meta["avgdl"])
     must_tids = {stats[t]["tid"] for t in must_set if t in stats}
-    qrel = spark.createDataFrame(
+    qrel = local_frame(
+        spark,
         [
             (
                 s["tid"],
@@ -181,7 +184,6 @@ def _eval_bool(index: Index, node: BoolNode, now=None) -> DataFrame:
     Field clauses are non-scoring restrictions in any positive position.
     """
     spark = index.spark
-    empty = spark.createDataFrame([], "docid long, score double")
 
     # plain-term children fold into ONE postings scan (weights + occur)
     weights: dict[str, float] = {}
@@ -253,8 +255,8 @@ def _eval_bool(index: Index, node: BoolNode, now=None) -> DataFrame:
                 should_extras.append(sub)
 
     base, n_must_tids, missing_must = _scored_tokens(index, weights, must_set)
-    if missing_must:
-        return empty  # a required term is absent from the index
+    if missing_must:  # a required term is absent from the index
+        return empty_scores(spark)
 
     parts: list[DataFrame] = []
     n_required = n_must_tids + len(must_extras)
@@ -267,11 +269,11 @@ def _eval_bool(index: Index, node: BoolNode, now=None) -> DataFrame:
 
     if not parts:
         if weights:
-            return empty  # scoring terms requested, none resolved
+            return empty_scores(spark)  # scoring terms requested, none resolved
         if filters or not_filters or ban_tokens or not_parts:
             agg = index.docs().select("docid", F.lit(1.0).alias("score"))
         else:
-            return empty
+            return empty_scores(spark)
     else:
         merged = parts[0]
         for p in parts[1:]:

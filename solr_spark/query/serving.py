@@ -12,12 +12,17 @@ cores. This module closes the gap for a SERVING workload:
   (solr/core/src/java/org/apache/solr/search/SolrIndexSearcher.java:123-124
   caches a DocList window keyed by (query, sort, filters); a commit
   opens a new searcher with cold caches — here maintenance ops bump the
-  handle generation, invalidating entries).
+  handle generation, invalidating entries; rows whose plan started
+  before a commit still answer their own request but are never
+  cached).
 - `QueryBatcher` — a driver-side leader/follower micro-batcher:
   concurrent `search()` callers enqueue; a background loop drains the
   queue every `max_wait_ms` and executes the whole wave as ONE
   `bm25_topk_batch` plan, so P concurrent clients cost one dictionary
-  seek + two shuffles instead of P of each. This is the classic
+  seek + two shuffles instead of P of each. The wave's side tables
+  (query weights, labels) are driver-built LocalRelations
+  (`session.local_frame`), so their broadcasts start no Python worker
+  and a wave costs about its postings plan alone. This is the classic
   dynamic-batching server shape; per-query results are rank-identical
   to `bm25_topk` (asserted by tests/test_round5_serving.py).
 
@@ -51,14 +56,23 @@ def _qr_cache(index: Index) -> OrderedDict:
 
 def _qr_get(index: Index, key) -> list[Row] | None:
     lru = _qr_cache(index)
+    key = (index._gen, *key)
     if key in lru:
         lru.move_to_end(key)
         return lru[key]
     return None
 
 
-def _qr_put(index: Index, key, rows: list[Row]) -> None:
+def _qr_put(index: Index, gen: int, key, rows: list[Row]) -> None:
+    """Cache `rows`, computed against handle generation `gen` (read
+    BEFORE the query was planned). A commit that landed between plan
+    and collect bumped the generation, and the rows may hold docids it
+    deleted: they are dropped. The generation is also part of the key,
+    so a commit racing this check still leaves the entry unreachable."""
+    if gen != index._gen:
+        return
     lru = _qr_cache(index)
+    key = (gen, *key)
     lru[key] = rows
     lru.move_to_end(key)
     while len(lru) > QR_LRU_CAP:
@@ -85,9 +99,10 @@ def bm25_search(
         hit = _qr_get(index, key)
         if hit is not None:
             return hit
+    gen = index._gen
     rows = bm25_topk(index, qtext, k=k, mode=mode, field=field).collect()
     if use_cache:
-        _qr_put(index, key, rows)
+        _qr_put(index, gen, key, rows)
     return rows
 
 
@@ -219,6 +234,7 @@ class QueryBatcher:
             for r in wave:
                 by_text.setdefault(r.qtext, []).append(r)
             qids = {f"q{i}": t for i, t in enumerate(by_text)}
+            gen = self.index._gen
             out = bm25_topk_batch(
                 self.index, qids, k=self.k, mode=self.mode, field=self.field
             ).collect()
@@ -235,6 +251,7 @@ class QueryBatcher:
                 if self.use_cache:
                     _qr_put(
                         self.index,
+                        gen,
                         (text, self.k, self.mode, self.field),
                         slim,
                     )

@@ -44,6 +44,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from solr_spark.index.builder import Index
+from solr_spark.session import local_frame
 
 MAX_EXPANSIONS = 128
 
@@ -278,9 +279,7 @@ class _SpanEval:
         raise TypeError(node)
 
     def _empty(self) -> DataFrame:
-        return self.index.spark.createDataFrame(
-            [], "docid long, s long, e long"
-        )
+        return local_frame(self.index.spark, [], "docid long, s long, e long")
 
     def _near(self, node: NearNode) -> DataFrame:
         slop = node.dist - 1
@@ -366,7 +365,7 @@ def surround_docids(
     all_tids = sorted({t for v in tids_of.values() for t in v})
     spark = index.spark
     if not all_tids:
-        return spark.createDataFrame([], "docid long, n_spans long")
+        return local_frame(spark, [], "docid long, n_spans long")
     pos = (
         index.positions()
         .where(F.col("bucket").isin(index.pbuckets_for(all_tids)))

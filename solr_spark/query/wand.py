@@ -51,7 +51,10 @@ from pyspark.sql import functions as F
 from solr_spark.functions.bm25 import B, K1, idf_py
 from solr_spark.index.blocks import varint_decode
 from solr_spark.index.builder import Index
-from solr_spark.query.engine import analyze_query, bm25_topk, norm_mode
+from solr_spark.query.engine import (
+    analyze_query, bm25_topk, empty_scores, norm_mode,
+)
+from solr_spark.session import local_frame
 
 #: widen every threshold cut by this much — covers float64 sum-order ulp
 #: differences between driver-side and executor-side arithmetic
@@ -118,7 +121,6 @@ def _wand_driver(
     on one node, and tests force it to prove both venues agree.
     """
     spark = index.spark
-    empty = spark.createDataFrame([], "docid long, score double")
     ptids = list(weights)
     rows = (
         index.blocks()
@@ -133,7 +135,7 @@ def _wand_driver(
         ess_rows, {g: weights[g] for g in essential}, avgdl
     )
     if docids.size == 0:
-        return empty
+        return empty_scores(spark)
     uniq, inv = np.unique(docids, return_inverse=True)
     s_hat = np.zeros(uniq.size)
     np.add.at(s_hat, inv, contribs)
@@ -152,7 +154,7 @@ def _wand_driver(
     cand_ids = uniq[mask]
     cand_shat = s_hat[mask]
     if cand_ids.size == 0:
-        return empty
+        return empty_scores(spark)
 
     ne_weights = {g: weights[g] for g in non_essential}
     if cand_ids.size > max(50 * k, 2000):
@@ -192,7 +194,7 @@ def _wand_driver(
 
     order = np.lexsort((out_ids, -np.round(scores, 9)))[:k]
     out = [(int(out_ids[i]), float(scores[i])) for i in order]
-    return spark.createDataFrame(out, "docid long, score double")
+    return local_frame(spark, out, "docid long, score double")
 
 
 def _decode_score_fn(weights: dict[int, float], avgdl: float):
@@ -269,9 +271,8 @@ def bm25_topk_wand(
         return bm25_topk(index, qtext, k, mode, field=field)
     spark = index.spark
     qterms = analyze_query(qtext, index)
-    empty = spark.createDataFrame([], "docid long, score double")
     if not qterms:
-        return empty
+        return empty_scores(spark)
     n_docs = index.meta["n_docs"]
     if index.meta.get("fields"):
         # multi-field: the query targets ONE field; its avgdl feeds both
@@ -284,7 +285,7 @@ def bm25_topk_wand(
     stats = index.term_stats_for(list(qterms), field=fld)
     present = [t for t in qterms if t in stats]
     if not present or (mode == "AND" and len(present) < len(qterms)):
-        return empty
+        return empty_scores(spark)
 
     tid_of = {t: stats[t]["tid"] for t in present}
     weights = {
@@ -427,8 +428,8 @@ def bm25_topk_wand(
     if len(pre) == cap and pre[-1]["_bound"] >= thresh - EPS:
         return bm25_topk(index, qtext, k, mode, field=field)  # cap overflow: exact fallback
     if not cand_rows:
-        return empty
-    cand = spark.createDataFrame(cand_rows, "docid long, s_hat double")
+        return empty_scores(spark)
+    cand = local_frame(spark, cand_rows, "docid long, s_hat double")
 
     # (4) correction WITHOUT a flat-postings rescan: only pruned/non-
     # essential blocks whose docid range can contain a candidate are
